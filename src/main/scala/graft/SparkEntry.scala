@@ -844,7 +844,7 @@ object SparkEntry {
         Seq(PlugAction("text", "`regexp_replace(text, '[0-9]+', '<num>')`")))
       plugged(table(s, dir, "documents"), List(rule))
         .select(col("doc_id"), col("lang"),
-          graft.ops.TextFunctions.md5For(s)(col("text")).as("text_md5"))
+          graft.ops.TextFunctions.md5hex(col("text")).as("text_md5"))
     }),
 
     // Extension: token counting + document fingerprinting (rolling md5).
@@ -857,7 +857,7 @@ object SparkEntry {
         nTokens.as("n_tokens"),
         (length(regexp_replace(col("text"), "\\s+", "")) / greatest(nTokens, lit(1)))
           .as("avg_token_len"),
-        fingerprintFor(s)(col("text")).as("fp"))
+        fingerprint(col("text")).as("fp"))
     }),
 
     // Extension: quality scoring (length/punct/stopword ratios).
@@ -924,7 +924,7 @@ object SparkEntry {
     "events_props_extract" -> ((s, dir) =>
       events(s, dir).select(
         col("event_id"),
-        graft.ops.TextFunctions.jsonGetFor(s)(col("props"), "k").cast("int").as("k"))),
+        graft.ops.TextFunctions.jsonGet(col("props"), "k").cast("int").as("k"))),
 
     // Extension: exact dedup by md5 fingerprint (hash-groupBy, 32-byte keys).
     "dedup_exact" -> ((s, dir) =>

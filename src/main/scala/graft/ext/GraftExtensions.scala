@@ -6,13 +6,13 @@ import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.IntegerType
 
-/** Session extension registering graft's codegen'd kernels as SQL functions.
-  * Install with `spark.sql.extensions=graft.ext.GraftExtensions` — then
-  * `graft_cosine(a, b)`, `graft_dot_double(a, b)`, `graft_minhash_sig(sh, k)`
-  * and `graft_simhash60(hashes)` resolve anywhere (SQL text, DataFrame expr,
-  * streaming queries). The graft.ops operators pick these up automatically
-  * when present and fall back to the portable higher-order-function
-  * formulations (bit-identical results) when not.
+/** Session extension registering graft's codegen'd kernels under SQL names.
+  * Install with `spark.sql.extensions=graft.ext.GraftExtensions` so SQL
+  * text can call `graft_cosine(a, b)`, `graft_minhash_sig(sh, 16)` and the
+  * rest. The DataFrame API does not need it: the graft.ops constructors
+  * (`Similarity.cosine`, `Dedup.minhashSignature`, ...) build the same
+  * expressions directly, in any session. The integer-literal checks below
+  * apply to the SQL forms only.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -93,7 +93,7 @@ object HashKernels {
 
   /** Distinct word n-gram shingles (first-occurrence order); fewer than n
     * tokens collapse to one whole-text shingle — identical semantics to
-    * [[graft.ops.TextFunctions.shingles]]. */
+    * the `zip_with` formulation in the test oracle `HofOracle.shingles`. */
   def shingles(toks: ArrayData, n: Int): ArrayData = {
     val m   = toks.numElements()
     val sep = UTF8String.fromString(" ")
@@ -117,8 +117,8 @@ object HashKernels {
   }
 
   /** ALL word n-gram positions, duplicates kept; fewer than n tokens give
-    * an EMPTY array — identical semantics to
-    * [[graft.ops.TextFunctions.gramsAll]] (note the divergence from
+    * an EMPTY array — identical semantics to the test oracle
+    * `HofOracle.gramsAll` (note the divergence from
     * [[shingles]], which collapses short texts to one whole-text shingle).
     * A null token poisons its grams to null, like `concat` in the HOF
     * chain. */
@@ -211,9 +211,9 @@ case class Hash60Array(child: Expression) extends UnaryExpression {
 }
 
 /** `graft_minhash_sig(shingles, k)`: MinHash signature as array<bigint>.
-  * Null-propagating, like the portable HOF fold in
-  * [[graft.ops.Dedup.minhashSignature]] — NULL shingles give NULL, so the
-  * kernel and the fallback stay bit-identical on every input. */
+  * Null-propagating, like the portable HOF fold in the test oracle
+  * `HofOracle.minhashSignature` — NULL shingles give NULL, so the kernel
+  * and the oracle stay bit-identical on every input. */
 case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_minhash_sig"
@@ -236,7 +236,7 @@ case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
 }
 
 /** `graft_shingles(tokens, n)`: distinct word n-grams as array<string>.
-  * Null-propagating, matching [[graft.ops.TextFunctions.shingles]]. */
+  * Null-propagating, matching the test oracle `HofOracle.shingles`. */
 case class ShinglesExpr(child: Expression, n: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "graft_shingles"
@@ -260,7 +260,7 @@ case class ShinglesExpr(child: Expression, n: Int) extends UnaryExpression {
 
 /** `graft_grams(tokens, n)`: ALL word n-gram positions (duplicates kept;
   * shorter-than-n input gives an empty array) as array<string>.
-  * Null-propagating, matching [[graft.ops.TextFunctions.gramsAll]]. */
+  * Null-propagating, matching the test oracle `HofOracle.gramsAll`. */
 case class GramsAllExpr(child: Expression, n: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(StringType, containsNull = true)
   override def prettyName: String = "graft_grams"

@@ -44,9 +44,9 @@ private[ext] trait FloatArrayArgs { self: BinaryExpression =>
   * These expressions generate a tight fused loop instead — the semantics
   * (strict left-to-right double accumulation; NULL for NULL inputs and for
   * mismatched lengths, where `zip_with`'s null-padding poisons the fold)
-  * match the higher-order-function formulation bit for bit, so results are
-  * interchangeable with [[graft.ops.Similarity.dotDouble]] / `cosine` and
-  * with the DuckDB `list_reduce` oracle.
+  * match the higher-order-function formulation (the test oracle
+  * `HofOracle.dotDouble` / `cosine`) bit for bit, and with it the DuckDB
+  * `list_reduce` oracle.
   */
 case class DotProductDouble(left: Expression, right: Expression)
     extends BinaryExpression with FloatArrayArgs {
@@ -100,7 +100,7 @@ case class DotProductDouble(left: Expression, right: Expression)
   * [[graft.ops.Similarity.hyperplaneSigns]], planes `firstPlane ..
   * firstPlane+planes-1`) are accumulated per plane in element order, so
   * every per-plane sum is bit-identical to the higher-order-function
-  * formulation in [[graft.ops.Similarity.lshBucket]] (strict left fold) and
+  * formulation in the test oracle `HofOracle.lshBucket` (strict left fold) and
   * to the DuckDB oracle's `list_reduce`.
   *
   * The HOF route evaluates `planes` interpreted CodegenFallback folds per

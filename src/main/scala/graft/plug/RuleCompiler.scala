@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.collection.immutable.ListMap
 import scala.util.{Success, Try}
 
 /** Compiles a [[PlugRule]] into Catalyst `Column` expressions.
@@ -40,14 +41,21 @@ object RuleCompiler {
     }
 
   /** One compiled rule: every (top-level) column it rewrites, the audit
-    * array update (if plug details are enabled), and the old-value copies
-    * (if keepOldField). Applied as `df.withColumns(allUpdates)`. */
+    * array update (if plug details are enabled), the old-value copies (if
+    * keepOldField), and the rule's row predicates over the frame it is
+    * applied to — `hit` (the condition matched) and `changed` (matched AND
+    * some action changes a value; the audit gate). Applied as
+    * `df.withColumns(allUpdates)`. */
   case class Compiled(
       updates: Seq[(String, Column)],
       oldCopies: Seq[(String, Column)],
-      auditUpdate: Option[(String, Column)]
+      auditUpdate: Option[(String, Column)],
+      hit: Column,
+      changed: Column
   ) {
-    def allUpdates: Map[String, Column] = (oldCopies ++ updates ++ auditUpdate).toMap
+    /** Insertion-ordered, so new columns (the old-value copies) are
+      * appended in action order. */
+    def allUpdates: Map[String, Column] = ListMap(oldCopies ++ updates ++ auditUpdate: _*)
   }
 
   def compile(
@@ -109,12 +117,11 @@ object RuleCompiler {
 
     // Null-safe change detection, OR-ed across actions; the comparison
     // operand is the post-coercion value, matching the reference's
-    // `not(key <=> cast(v as double))` (PlugRule.scala:50,58). Only built
-    // when an audit column needs the gate. For a per-element action the
-    // extraction `col("items.price")` resolves to the ARRAY of element
-    // values, so the gate is "some element differs" (exists), null/empty
-    // arrays counting as unchanged.
-    def anyChanged: Column =
+    // `not(key <=> cast(v as double))` (PlugRule.scala:50,58). For a
+    // per-element action the extraction `col("items.price")` resolves to
+    // the ARRAY of element values, so the gate is "some element differs"
+    // (exists), null/empty arrays counting as unchanged.
+    val anyChanged: Column =
       converted.map { case (a, v) =>
         if (crossesArray(a.key))
           coalesce(exists(col(a.key), e => !(e <=> v)), lit(false))
@@ -187,6 +194,8 @@ object RuleCompiler {
       if (!keepOldField) Seq.empty
       else converted.map(_._1.updateKey).distinct.map(k => s"${k}_${rule.name}_old" -> col(k))
 
+    val changed = cond && anyChanged
+
     // Audit-trail append: if the rule matched AND changed something, append
     // a PlugDetail to the audit array. Pure built-in exprs replace the
     // reference's UDF4 (SparkPlugUDFs.scala:14-31); a custom appender hook
@@ -194,9 +203,9 @@ object RuleCompiler {
     val auditUpdate = plugDetailsColumn.map { pd =>
       val appender = auditAppend.getOrElse(AuditAppender.default)
       val appended = appender.append(col(pd), rule.name, rule.version, rule.actions.map(_.key))
-      pd -> when(cond && anyChanged, appended).otherwise(col(pd))
+      pd -> when(changed, appended).otherwise(col(pd))
     }
 
-    Compiled(updates, oldCopies, auditUpdate)
+    Compiled(updates, oldCopies, auditUpdate, cond, changed)
   }
 }

@@ -143,7 +143,8 @@ case class SparkPlug(
 
   /** Per-rule telemetry over the SAME sequential semantics as [[plug]]:
     * for each rule, how many rows its condition matched and how many it
-    * actually CHANGED (null-safe `<=>` against the post-coercion value) —
+    * actually CHANGED (RuleCompiler's `hit` and `changed` predicates, the
+    * same gate that decides the rule's plugDetails record) —
     * evaluated against the frame state that rule actually saw, i.e. after
     * every earlier rule applied. The dry-run dashboard behind rule
     * rollouts: a rule with matches but no changes is a no-op, one with
@@ -156,19 +157,12 @@ case class SparkPlug(
     * one conditional aggregate at the end reads them all; the wide 1-row
     * result unpivots to a #rules-row frame. */
   def ruleHitStats(in: DataFrame, rules: List[PlugRule]): DataFrame = {
-    var df = in
+    var df = preProcessInput(in)
     rules.zipWithIndex.foreach { case (rule, i) =>
-      val fields = PlugRule.buildFieldsMap(df.schema).toMap
-      val changed = rule.actions.map { a =>
-        val dt = fields.getOrElse(a.key, throw new IllegalArgumentException(
-          s"""Rule "${rule.name}": Field "${a.key}" not found in the schema."""))
-        val v = RuleCompiler.coerceValue(a.value, dt).getOrElse(lit(null))
-        !(col(a.key) <=> v)
-      }.reduceOption(_ || _).getOrElse(lit(false))
-      val cond = expr(rule.condition)
+      val c = RuleCompiler.compile(rule, df.schema, None, None, keepOldField = false)
       df = applyRule(
-        df.withColumn(s"__hit_$i", cond)
-          .withColumn(s"__chg_$i", cond && changed),
+        df.withColumn(s"__hit_$i", c.hit)
+          .withColumn(s"__chg_$i", c.changed),
         rule)
     }
     val aggs = rules.indices.flatMap(i => Seq(

@@ -826,7 +826,8 @@ object StreamingOps {
     * read back from a committed, `#indexof`-gated index table so the
     * gate's startup never re-derives the benchmark's shingle set. Same
     * per-batch probe, same persist-for-the-query's-lifetime + release-
-    * on-termination contract. */
+    * on-termination contract. `words`/`k` must be the settings the index
+    * was built with. */
   def contamGateSinkFromIndex(
       stream: DataFrame,
       grams: DataFrame,
@@ -834,14 +835,16 @@ object StreamingOps {
       idCol: String,
       textCol: String,
       dir: String,
-      shingleN: Int = 3
+      shingleN: Int = 3,
+      words: Int = 16384,
+      k: Int = 4
   ): org.apache.spark.sql.streaming.StreamingQuery = {
     grams.persist()
     // the Bloom filter is constant-size (2·words chunks) — collected
     // ONCE at sink creation into the plan literal every batch's
     // row-local membership test closes over (contaminationProbeWords),
     // instead of a persisted frame broadcast-joined per batch
-    val bloomWords = graft.ops.Corpus.collectBloomWords(bloom)
+    val bloomWords = graft.ops.Corpus.collectBloomWords(bloom, words)
     val released = new java.util.concurrent.atomic.AtomicBoolean(false)
     def release(): Unit = if (released.compareAndSet(false, true)) {
       grams.unpersist(): Unit
@@ -856,7 +859,7 @@ object StreamingOps {
         .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
           graft.ops.Corpus
             .contaminationProbeWords(grams, bloomWords, batch, idCol, textCol,
-              shingleN)
+              shingleN, k)
             .withColumn("batch_id", lit(batchId))
             .withColumn("flagged", col("n_bloom") > 0)
             .write.mode("append").parquet(dir)

@@ -5,10 +5,11 @@ import org.scalatest.matchers.should.Matchers
 
 /** Regression bound for rule-chain plan growth: each rule is ONE
   * `withColumns` Project, so a 100-rule chain must stay analyzable in
-  * seconds (graft.tools.ChainProfile measured ~1.8 s analyze / 2.4 s execute
-  * at 100 rules on local[8]). A regression that nests projections per
-  * action, or re-analyzes the full chain per rule, blows past this bound
-  * superlinearly and fails here instead of landing silently. */
+  * seconds (~1.8 s analyze / 2.4 s execute at 100 rules over 600k rows on
+  * local[8]; perfbench/'s plug workloads measure this split). A regression
+  * that nests projections per action, or re-analyzes the full chain per
+  * rule, blows past this bound superlinearly and fails here instead of
+  * landing silently. */
 class ChainScalingSpec extends AnyFlatSpec with Matchers {
 
   "a 100-rule chain" should "analyze and optimize within the regression bound" in {

@@ -473,4 +473,39 @@ class SparkPlugSpec extends AnyFlatSpec with Matchers {
     badType.validate(itemsDf.schema) shouldBe List(
       PlugRuleValidationError("r3", """Value "cheap" cannot be assigned to field items.price."""))
   }
+
+  it should "append keep-old copies in action order past four updates" in {
+    // 3 old copies + 3 updates + the audit update: above four entries a
+    // plain Map iterates in hash order, which reordered the copies
+    val rules = List(PlugRule("r9", "v1", "price > 0", Seq(
+      PlugAction("title", "t"), PlugAction("brand", "b"), PlugAction("price", "1"))))
+    val out = SparkPlug.builder(spark).enablePlugDetails().keepOldField.create()
+      .plug(df, rules).toOption.get
+    out.schema.fieldNames.toSeq shouldBe Seq("title", "brand", "price", "plugDetails",
+      "title_r9_old", "brand_r9_old", "price_r9_old")
+  }
+
+  it should "count changes in ruleHitStats exactly as the audit trail records them" in {
+    val mapDf = Seq(
+      ("iPhone", Map("region" -> "eu")),
+      ("Galaxy", Map("region" -> "us")),
+      ("Lumia", null.asInstanceOf[Map[String, String]])
+    ).toDF("title", "meta")
+    val cases = Seq(
+      itemsDf -> List(
+        PlugRule("rg", "v1", "brand = 'Samsung'", Seq(PlugAction("items.price", "50.0"))),
+        PlugRule("ra", "v1", "brand = 'Apple' or brand = 'Nokia'", Seq(PlugAction("items.price", "100.0")))),
+      mapDf -> List(
+        PlugRule("r1", "v1", "title = 'Galaxy'", Seq(PlugAction("meta.region", "us"))),
+        PlugRule("r2", "v1", "title <> 'Galaxy'", Seq(PlugAction("meta.region", "us")))))
+    cases.foreach { case (in, rules) =>
+      val plug = SparkPlug.builder(spark).enablePlugDetails().create()
+      val stats = plug.ruleHitStats(in, rules)
+        .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
+      val audited = plug.plug(in, rules).toOption.get
+        .select(explode($"plugDetails.name").as("rule")).groupBy("rule").count()
+        .as[(String, Long)].collect().toMap
+      rules.foreach(r => withClue(r.name)(stats(r.name) shouldBe audited.getOrElse(r.name, 0L)))
+    }
+  }
 }

@@ -448,6 +448,35 @@ class StreamingSpec extends AnyFlatSpec with Matchers {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
   }
 
+  it should "probe a prebuilt index at the filter size it was built with" in {
+    // words = 1024 packs the filter into 2048 chunks; probing it modulo
+    // the default 16384-word size would silently miss most hits
+    val benchmark = Seq((100L, "the quick brown fox jumps over the lazy dog"),
+      (101L, "a stitch in time saves nine")).toDF("doc_id", "text")
+    val docs = Seq((1L, "the quick brown fox runs home"), (2L, "nothing shared at all here"),
+      (3L, "over the lazy dog again"), (4L, "a stitch in time"), (5L, "saves nine lives"))
+    val (grams, bloom) = graft.ops.Corpus.contaminationIndex(benchmark, "text", 3, words = 1024, k = 2)
+    val out = java.nio.file.Files.createTempDirectory("graft_contam_gate_words").toString
+    val in = MemoryStream[(Long, String)]
+    val q = StreamingOps.contamGateSinkFromIndex(in.toDF().toDF("doc_id", "text"),
+      grams, bloom, "doc_id", "text", out, 3, words = 1024, k = 2)
+    try {
+      in.addData(docs: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "n_shingles", "n_exact", "n_bloom").as[(Long, Long, Long, Long)]
+        .collect().sortBy(_._1).toSeq
+    val gate = spark.read.parquet(out)
+    val ref = graft.ops.Corpus.contaminationBloom(benchmark, docs.toDF("doc_id", "text"),
+      "doc_id", "text", 3, words = 1024, k = 2)
+    rows(gate) shouldBe rows(ref)
+    gate.filter($"flagged").select("doc_id").as[Long].collect().sorted shouldBe
+      ref.filter($"n_bloom" > 0).select("doc_id").as[Long].collect().sorted
+    gate.filter($"flagged").count() should be >= 3L // docs 1, 3 and 4 share shingles
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+  }
+
   it should "admit at most N per key-window across batches, flagging overflow" in {
     val in = MemoryStream[(Long, Long, Long)] // (event_id, user_id, ts_ms)
     val limited = StreamingOps.rateLimitStream(
