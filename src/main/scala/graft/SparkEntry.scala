@@ -4229,12 +4229,12 @@ object SparkEntry {
       val reg = scratch("mbind_registry")
       Q.commitModelBytesBound(s, reg, "quality-lr",
         Q.linearModelBytes(Q.pseudoWeights(16), bias = 0.25), corpusDir, v0)
-      // bound + fresh: scoring the training snapshot is SERVED (the
-      // freshness gate passes and the plan executes end-to-end). The
-      // result of this pass is unused, so only the id column
-      // materializes (r15, the r14-verdict §6-pruning ask): ReadSchema
-      // narrows to doc_id and the full-corpus token scoring is not paid
-      // twice — the second, returned scoring pass is unchanged.
+      // bound + fresh: scoring the training snapshot is SERVED — the
+      // freshness gate passes, and what runs is that gate plus an
+      // id-only scan: the result of this pass is unused, so only the id
+      // column materializes (ReadSchema narrows to doc_id) and the
+      // full-corpus token scoring is not paid twice. The second, returned
+      // scoring pass runs the full plan.
       Q.linearScoreFromArtifact(M.read(s, corpusDir), "doc_id", "text",
           reg, "quality-lr", requireFresh = true)
         .select(col("doc_id")).queryExecution.toRdd.count(): Unit

@@ -85,21 +85,6 @@ object RuleCompiler {
       }
     }
 
-    // True when the path's parent is a string-keyed map — the action
-    // targets one MAP ENTRY (the last segment is the entry key, which is
-    // data, not schema — so it needs no fields-map membership).
-    def mapEntryParent(key: String): Option[String] = {
-      val segs = key.split('.')
-      if (segs.length < 2) None
-      else {
-        val parent = segs.dropRight(1).mkString(".")
-        fields.get(parent) match {
-          case Some(MapType(StringType, _, _)) => Some(parent)
-          case _ => None
-        }
-      }
-    }
-
     // Invalid literals silently become NULL assignments when validation is
     // off — reference parity (PlugRule.scala:129 `.getOrElse(null)`).
     // An action key ABSENT from the schema fails here: the reference fails
@@ -107,10 +92,8 @@ object RuleCompiler {
     // an unresolved-column error); we raise the validation message rather
     // than silently adding a new column via withColumns.
     val converted: Seq[(PlugAction, Column)] = rule.actions.map { a =>
-      val dt = fields.get(a.key)
-        .orElse(mapEntryParent(a.key).map(p =>
-          fields(p).asInstanceOf[MapType].valueType))
-        .getOrElse(throw new IllegalArgumentException(
+      val dt = PlugRule.targetType(a.key, fields).getOrElse(
+        throw new IllegalArgumentException(
           s"""Rule "${rule.name}": Field "${a.key}" not found in the schema."""))
       a -> coerceValue(a.value, dt).getOrElse(lit(null))
     }
@@ -125,8 +108,8 @@ object RuleCompiler {
       converted.map { case (a, v) =>
         if (crossesArray(a.key))
           coalesce(exists(col(a.key), e => !(e <=> v)), lit(false))
-        else mapEntryParent(a.key) match {
-          case Some(p) =>
+        else PlugRule.mapEntryParent(a.key, fields) match {
+          case Some((p, _)) =>
             !(element_at(col(p), lit(a.key.split('.').last)) <=> v)
           case None => !(col(a.key) <=> v)
         }
@@ -165,7 +148,7 @@ object RuleCompiler {
       converted.groupBy(_._1.updateKey).toSeq.sortBy(_._1).map { case (top, acts) =>
         val updated = acts.foldLeft(col(top)) {
           case (acc, (a, v)) if a.key.contains('.') &&
-              (crossesArray(a.key) || mapEntryParent(a.key).isDefined) =>
+              (crossesArray(a.key) || PlugRule.mapEntryParent(a.key, fields).isDefined) =>
             // Array-of-struct element or map-entry override: the type
             // walker compiles transform/map_concat/withField as the path
             // demands (extensions beyond the reference, which only

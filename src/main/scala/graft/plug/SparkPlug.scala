@@ -61,11 +61,14 @@ case class SparkPlug(
 
   /** Validate (if enabled) then fold the rules over the input frame.
     * (reference: SparkPlug.scala:29-40) */
-  def plug(in: DataFrame, rules: List[PlugRule]): Either[List[PlugRuleValidationError], DataFrame] = {
-    val validationResult =
-      if (isValidateRulesEnabled) validate(in.schema, rules) else Nil
-    if (validationResult.nonEmpty) Left(validationResult)
-    else Right(plugDf(in, rules))
+  def plug(in: DataFrame, rules: List[PlugRule]): Either[List[PlugRuleValidationError], DataFrame] =
+    validated(in, rules)(plugDf(in, rules))
+
+  /** `run` unless validation is enabled and finds errors. */
+  private def validated(in: DataFrame, rules: List[PlugRule])(
+      run: => DataFrame): Either[List[PlugRuleValidationError], DataFrame] = {
+    val errors = if (isValidateRulesEnabled) validate(in.schema, rules) else Nil
+    if (errors.nonEmpty) Left(errors) else Right(run)
   }
 
   /** Duplicate-name check + static per-rule checks; the SQL dry-run only
@@ -118,11 +121,8 @@ case class SparkPlug(
     * exactly like the sequential fold), AND-ed with not-yet-matched, and
     * folded into the flag afterwards. All narrow projections — the chain
     * costs the same single pass as [[plug]]. */
-  def plugFirstMatch(in: DataFrame, rules: List[PlugRule]): Either[List[PlugRuleValidationError], DataFrame] = {
-    val validationResult =
-      if (isValidateRulesEnabled) validate(in.schema, rules) else Nil
-    if (validationResult.nonEmpty) Left(validationResult)
-    else {
+  def plugFirstMatch(in: DataFrame, rules: List[PlugRule]): Either[List[PlugRuleValidationError], DataFrame] =
+    validated(in, rules) {
       val flag = "__graft_matched"
       val hit  = "__graft_hit"
       val seeded = preProcessInput(in).withColumn(flag, lit(false))
@@ -137,9 +137,8 @@ case class SparkPlug(
             .withColumn(flag, col(flag) || col(hit))
             .drop(hit)
       }
-      Right(withChangeCount(plugged.drop(flag)))
+      withChangeCount(plugged.drop(flag))
     }
-  }
 
   /** Per-rule telemetry over the SAME sequential semantics as [[plug]]:
     * for each rule, how many rows its condition matched and how many it
@@ -159,11 +158,10 @@ case class SparkPlug(
   def ruleHitStats(in: DataFrame, rules: List[PlugRule]): DataFrame = {
     var df = preProcessInput(in)
     rules.zipWithIndex.foreach { case (rule, i) =>
-      val c = RuleCompiler.compile(rule, df.schema, None, None, keepOldField = false)
-      df = applyRule(
-        df.withColumn(s"__hit_$i", c.hit)
-          .withColumn(s"__chg_$i", c.changed),
-        rule)
+      val c = compileRule(df.schema, rule)
+      df = df.withColumn(s"__hit_$i", c.hit)
+        .withColumn(s"__chg_$i", c.changed)
+        .withColumns(c.allUpdates)
     }
     val aggs = rules.indices.flatMap(i => Seq(
       sum(when(col(s"__hit_$i"), 1L).otherwise(0L)).as(s"__h_$i"),
@@ -260,12 +258,14 @@ case class SparkPlug(
       }
     }
 
+  /** Compile one rule with this plug's audit and keep-old settings. */
+  private def compileRule(schema: StructType, rule: PlugRule): RuleCompiler.Compiled =
+    RuleCompiler.compile(
+      rule, schema, plugDetails.map(_.column), plugDetails.map(_.appender), isKeepOldField)
+
   /** Apply one rule = one projection. */
-  private[plug] def applyRule(frame: DataFrame, rule: PlugRule): DataFrame = {
-    val compiled = RuleCompiler.compile(
-      rule, frame.schema, plugDetails.map(_.column), plugDetails.map(_.appender), isKeepOldField)
-    frame.withColumns(compiled.allUpdates)
-  }
+  private[plug] def applyRule(frame: DataFrame, rule: PlugRule): DataFrame =
+    frame.withColumns(compileRule(frame.schema, rule).allUpdates)
 
   /** Changed-row count. The reference runs an extra eager full-scan job with
     * a LongAccumulator (SparkPlug.scala:52-62); we attach `Dataset.observe`

@@ -1,6 +1,6 @@
 package graft.plug
 
-import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructType}
 
 /** A single column override: set `key` (possibly a dotted struct path) to
   * `value` when the owning rule's condition holds.
@@ -40,19 +40,8 @@ case class PlugRule(name: String, version: String, condition: String, actions: S
       List(validationError("At the least one action must be specified per rule."))
     else {
       val fields = PlugRule.buildFieldsMap(schema).toMap
-      // a path whose parent is a string-keyed map targets one map ENTRY;
-      // the entry key is data, so only the parent needs to exist — the
-      // value is checked against the map's value type
-      def mapEntryValueType(key: String): Option[DataType] = {
-        val segs = key.split('.')
-        if (segs.length < 2) None
-        else fields.get(segs.dropRight(1).mkString(".")).collect {
-          case m: org.apache.spark.sql.types.MapType
-              if m.keyType == org.apache.spark.sql.types.StringType => m.valueType
-        }
-      }
       actions.flatMap { action =>
-        fields.get(action.key).orElse(mapEntryValueType(action.key)) match {
+        PlugRule.targetType(action.key, fields) match {
           case None =>
             Some(validationError(s"""Field "${action.key}" not found in the schema."""))
           // Backtick values bypass static type checking entirely (reference:
@@ -93,4 +82,21 @@ object PlugRule {
             s"$prefix${f.name}.")
       case f => Seq((s"$prefix${f.name}", f.dataType))
     }
+
+  /** The string-keyed map whose ENTRY a dotted `key` targets: the parent
+    * path and its map type. The last segment is the entry key, which is
+    * data, not schema — so only the parent has to be in `fields`. */
+  def mapEntryParent(key: String, fields: Map[String, DataType]): Option[(String, MapType)] = {
+    val segs = key.split('.')
+    if (segs.length < 2) None
+    else {
+      val parent = segs.dropRight(1).mkString(".")
+      fields.get(parent).collect { case m @ MapType(StringType, _, _) => parent -> m }
+    }
+  }
+
+  /** Type an action on `key` assigns: the field's own type, or the map's
+    * value type for a map-entry path; None when the schema has neither. */
+  def targetType(key: String, fields: Map[String, DataType]): Option[DataType] =
+    fields.get(key).orElse(mapEntryParent(key, fields).map(_._2.valueType))
 }

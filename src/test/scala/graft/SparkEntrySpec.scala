@@ -4,6 +4,8 @@ import graft.plug.TestSpark
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
+import scala.jdk.CollectionConverters._
+
 /** Guards on the driver contract itself — the harness the correctness gate
   * runs through, so a wiring mistake here silently weakens every check. */
 class SparkEntrySpec extends AnyFlatSpec with Matchers {
@@ -23,123 +25,112 @@ class SparkEntrySpec extends AnyFlatSpec with Matchers {
     SparkEntry.entry(spark).count() should be > 0L
   }
 
-  it should "assign injective initials abbreviations for the bench line" in {
-    // Stage 5 of the bench degrade chain compresses names to
-    // prefix + token initials; an abbrev collision would silently merge
-    // two queries' times in the emitted JSON object.
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    val m = Bench.initialsAbbrev(names)
-    m.keySet shouldBe names.toSet
-    m.values.toSeq.distinct.size shouldBe names.size
-    m("dedup_ngram_jaccard") shouldBe "dd_nj"
-    // collision pairs resolve deterministically by lengthening per-token
-    m("docs_pack_seqs") shouldBe "dc_pase"
-    m("docs_part_sink") shouldBe "dc_pasi"
-    m("events_cohort") shouldBe "ev_coh"
-    m("events_conversion") shouldBe "ev_con"
-  }
+  // Bench stdout-line pins: each drives the real assembler with the
+  // whole live query set, pessimistic always-on ladder fields and a data
+  // path of typical length.
+  private lazy val names = SparkEntry.queries.keys.toSeq.sorted
+  private def benchLine(results: Seq[(String, (Double, Boolean))],
+      skipped: Seq[String] = Nil): String =
+    Bench.stdoutLine(results, names, skipped,
+      """"levels":"0x88,1x888,2x888,3x888,4x888,5x888","warmup_sec":8888,"spent_sec":8888,"contended":888""",
+      "/data/testdata/sf0.1")
+  // the line is json-parsed where it is read, so the specs parse it too
+  private def json(line: String) =
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+  private def keys(node: com.fasterxml.jackson.databind.JsonNode): Set[String] =
+    node.fieldNames.asScala.toSet
+  private def key(n: String): String = Bench.ordinalAbbrev(names)(n)
 
-  it should "keep bench abbreviations unique even for unresolvable names" in {
-    // docs_ab can never win an initials abbrev: dc_ab is taken by
-    // docs_a_b at level 1 and docs_ab's sole token caps at "ab". The
-    // fallback must not emit the colliding short form dc_ab — a duplicate
-    // JSON key would silently merge two queries' bench times.
-    val m = Bench.initialsAbbrev(Seq("docs_a", "docs_ab", "docs_a_b").sorted)
-    m.values.toSeq.distinct.size shouldBe 3
-    m("docs_ab") shouldBe "docs_ab" // full name, not the taken dc_ab
-  }
-
-  it should "keep the stage-5 bench line under budget at 120 queries" in {
-    // The driver parses the bench JSON from a ~2000-char tail window.
-    // Stage 5 (initials + 1-decimal times) is DESIGNED to hold decimal
-    // precision to ~120 queries under pessimistic 4-char times; past
-    // that the chain's stage 6 takes over (next test). Pin the designed
-    // guarantee at exactly 120 names (truncate or pad the live set).
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    val at120 =
-      if (names.size >= 120) names.take(120)
-      else names ++ (names.size until 120).map(i => s"text_future_query_$i")
-    val m = Bench.initialsAbbrev(at120)
-    m.values.toSeq.distinct.size shouldBe at120.size
-    val qs = at120.map(n => "\"" + m(n) + "\":88.8").mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":8888.88,"unit":"sec","queries":$qs,"failed":[],"levels":"0x88,1x888,2x888,3x888,4x888,5x888","warmup_sec":8888,"spent_sec":8888,"sf":"/root/testdata/sf0.1"}"""
-    withClue(s"projected stage-5 line length ${line.length}: ") {
-      line.length should be < 1850
-    }
-  }
-
-  it should "keep the stage-6 bench line under budget at 135 queries" in {
-    // Whole-second times, empty failed omitted — designed to hold to
-    // ~135 queries with pessimistic 3-char times (the always-on ladder
-    // fields cost ~5 queries of headroom); past that stage 7's
-    // single-letter prefixes take over (next test). Pin the designed
-    // guarantee at exactly 140 names (truncate or pad the live set).
-    val names0 = SparkEntry.queries.keys.toSeq.sorted
-    val names =
-      if (names0.size >= 135) names0.take(135)
-      else names0 ++ (names0.size until 135).map(i => s"text_future_query_$i")
-    val m = Bench.initialsAbbrev(names)
-    val qs = names.map(n => "\"" + m(n) + "\":888").mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":8888.88,"unit":"sec","queries":$qs,"levels":"0x88,1x888,2x888,3x888,4x888,5x888","warmup_sec":8888,"spent_sec":8888,"sf":"/root/testdata/sf0.1"}"""
-    withClue(s"projected stage-6 line length ${line.length} at ${names.size} queries: ") {
-      line.length should be < 1850
-    }
-  }
-
-  it should "keep the stage-7 bench line under budget at 155 queries" in {
-    // Single-letter family prefixes, whole-second times, empty failed
-    // omitted — designed to hold to ~155 queries (ladder fields cost
-    // ~5 of headroom); past that stage 8's
-    // sorted-list ordinals take over (next test). Pin the designed
-    // guarantee at exactly 160 names (truncate or pad the live set).
-    val names0 = SparkEntry.queries.keys.toSeq.sorted
-    val names =
-      if (names0.size >= 155) names0.take(155)
-      else names0 ++ (names0.size until 155).map(i => s"text_future_query_$i")
-    val m = Bench.initialsAbbrev(names, Bench.tightAbbrev)
-    m.values.toSeq.distinct.size shouldBe names.size // still injective
-    val qs = names.map(n => "\"" + m(n) + "\":888").mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":8888.88,"unit":"sec","queries":$qs,"levels":"0x88,1x888,2x888,3x888,4x888,5x888","warmup_sec":8888,"spent_sec":8888,"sf":"/root/testdata/sf0.1"}"""
-    withClue(s"projected stage-7 line length ${line.length} at ${names.size} queries: ") {
+  it should "keep the stage-9 bench line parseable for the full live set" in {
+    // The line is parsed from a ~2000-char tail window. Passing
+    // queries under half a second leave the map, so the length is bounded
+    // by the SLOW-query count (which the 2x bench gate bounds), not the
+    // set size. Pessimistic: 80 slow queries at 3-char times plus a
+    // 10-name failed list must fit at stage 9 however large the set grows.
+    val slow = names.take(80).toSet
+    val failed = names.takeRight(10).toSet
+    val line = benchLine(names.map(n =>
+      n -> (if (slow(n) || failed(n)) 888.0 else 0.1, !failed(n))))
+    withClue(s"stage-9 line length ${line.length} with 80 slow of ${names.size} queries: ") {
       line.length should be < 1800
     }
+    val j = json(line)
+    keys(j.get("queries")) shouldBe (slow ++ failed).map(key) // every slow or failed entry kept
+    j.get("failed").size shouldBe 10
   }
 
-  it should "keep the stage-8 bench line under budget at 185 queries" in {
-    // Base-36 ordinals with pessimistic 3-char times at the stage's
-    // DESIGNED size (the live set has outgrown it — stage 9 guards the
-    // full set); the mapping must be injective and decodable by
-    // re-sorting the query list.
-    val names0 = SparkEntry.queries.keys.toSeq.sorted
-    val names =
-      if (names0.size >= 185) names0.take(185)
-      else names0 ++ (names0.size until 185).map(i => s"text_future_query_$i")
+  it should "key the bench line by ordinals that decode by re-sorting" in {
+    // An ordinal collision would silently merge two queries' times in the
+    // emitted JSON object; decoding must need only the sorted query list.
     val m = Bench.ordinalAbbrev(names)
     m.values.toSeq.distinct.size shouldBe names.size
     names.zipWithIndex.foreach { case (n, i) =>
-      java.lang.Long.parseLong(m(n), 36) shouldBe i.toLong // reversible
+      java.lang.Long.parseLong(m(n), 36) shouldBe i.toLong
     }
-    val qs = names.map(n => "\"" + m(n) + "\":888").mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":8888.88,"unit":"sec","queries":$qs,"levels":"0x88,1x888,2x888,3x888,4x888,5x888","warmup_sec":8888,"spent_sec":8888,"sf":"/root/testdata/sf0.1"}"""
-    withClue(s"projected stage-8 line length ${line.length} at ${names.size} queries: ") {
-      line.length should be < 1800
+    val secs = names.zipWithIndex.map { case (n, i) => n -> (i % 40).toDouble }.toMap
+    val qs = json(benchLine(names.map(n => n -> (secs(n), true)))).get("queries")
+    keys(qs) should not be empty
+    keys(qs).foreach { k =>
+      qs.get(k).asLong shouldBe secs(names(java.lang.Long.parseLong(k, 36).toInt)).toLong
     }
   }
 
-  it should "keep the stage-9 bench line parseable for the full live set" in {
-    // Last-resort stage: sub-half-second passing queries leave the map,
-    // so the line's length is bounded by the SLOW-query count (which the
-    // 2x bench gate bounds), not the set size. Pessimistic projection: 80
-    // slow queries at 3-char times plus a 10-name failed list must parse
-    // no matter how large the registered set grows.
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    val m = Bench.ordinalAbbrev(names)
-    val slow = names.take(80)
-    val qs = slow.map(n => "\"" + m(n) + "\":888").mkString("{", ",", "}")
-    val failed = names.takeRight(10).map("\"" + _ + "\"").mkString("[", ",", "]")
-    val line = s"""{"metric":"total","value":8888.88,"unit":"sec","queries":$qs,"failed":$failed,"levels":"0x88,1x888,2x888,3x888,4x888,5x888","warmup_sec":8888,"spent_sec":8888,"sf":"/root/testdata/sf0.1"}"""
-    withClue(s"projected stage-9 line length ${line.length} with 80 slow of ${names.size} queries: ") {
-      line.length should be < 1800
+  it should "omit only fast passing queries from the stage-9 bench line" in {
+    val results = names.zipWithIndex.map { case (n, i) =>
+      n -> (if (i % 10 == 0) 1.6 else 0.49, true)
+    }
+    val line = benchLine(results)
+    line should include (""","failed":[],""") // an empty failed list still prints
+    // the headline total keeps 2 decimals
+    line should include (s""""value":${"%.2f".format(results.map(_._2._1).sum)},""")
+    keys(json(line).get("queries")) shouldBe
+      names.indices.filter(_ % 10 == 0).map(i => key(names(i))).toSet
+  }
+
+  it should "fall back to the stage-10 bench line when stage 9 overflows" in {
+    // Every query at ~1 s: stage 9 keeps all of them (>= 2,449 chars at
+    // 355 queries: 36 one-char and 319 two-char keys at >= 6-7 chars per
+    // entry), so stage 10 drops the passing 1-2 s entries too and keeps
+    // only the slow tail.
+    val tail = names.takeRight(10).toSet
+    val line = benchLine(names.map(n => n -> (if (tail(n)) 5.0 else 1.0, true)))
+    line.length should be < 1800
+    keys(json(line).get("queries")) shouldBe tail.map(key)
+  }
+
+  it should "always carry non-empty failed and skipped lists" in {
+    // stage 9 with a fast failure and a short skipped suffix
+    val skipped = names.takeRight(5)
+    val bad = names.head
+    val run = names.dropRight(5)
+    val j9 = json(benchLine(run.map(n => n -> (0.1, n != bad)), skipped))
+    j9.get("failed").get(0).asText shouldBe bad
+    keys(j9.get("queries")) shouldBe Set(key(bad)) // failures keep their entry
+    j9.get("skipped").elements.asScala.map(_.asText).toSeq shouldBe skipped.map(key)
+    // stage 10 with a 1 s failure and a long skipped suffix (count + first key)
+    val longSkip = names.takeRight(20)
+    val j10 = json(benchLine(names.dropRight(20).map(n => n -> (1.0, n != bad)), longSkip))
+    j10.get("failed").get(0).asText shouldBe bad
+    keys(j10.get("queries")) shouldBe Set(key(bad))
+    j10.get("skipped_n").asInt shouldBe 20
+    j10.get("skipped_from").asText shouldBe key(longSkip.head)
+  }
+
+  it should "build sessions with the object-store file system only when asked" in {
+    def fsImpl(objectStoreFs: Boolean) =
+      Sessions.settings(4, objectStoreFs).toMap.get("spark.hadoop.fs.file.impl")
+    fsImpl(objectStoreFs = true) shouldBe Some("org.apache.hadoop.fs.RawLocalFileSystem")
+    fsImpl(objectStoreFs = false) shouldBe None
+    // the test session comes from the factory with objectStoreFs = false
+    spark.sparkContext.hadoopConfiguration.get("fs.file.impl") shouldBe null
+  }
+
+  it should "build the test session with every factory setting" in {
+    // the settings the oracle compare depends on must not drift between
+    // the test suite and the Verify/Bench sessions
+    spark.sparkContext.master shouldBe "local[4]"
+    Sessions.settings(4, objectStoreFs = false).foreach { case (k, v) =>
+      withClue(k) { spark.conf.get(k) shouldBe v }
     }
   }
 
